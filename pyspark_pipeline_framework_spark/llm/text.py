@@ -296,22 +296,6 @@ def md5_fingerprint(col: Column | str) -> Column:
     return F.md5(normalize_text(col))
 
 
-def rolling_shingle_hashes(col: Column | str, k: int = 3) -> Column:
-    """Array of xxhash64 values of the k-word shingles of the text —
-    the 'rolling hash' fingerprint basis (and MinHash input). JVM-side
-    xxhash64: deterministic across executors and sessions.
-
-    Hot-path note: ``transform`` is an interpreted HigherOrderFunction,
-    so the embedded split re-evaluates per element; for corpus-scale
-    shingling use the dedup module's ``_exploded_shingles`` pattern
-    (materialize the word array as a column first — measured 3.9×)."""
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.split(F.trim(F.lower(c)), r"\s+")
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i, k))))
-
-
 def corpus_stats(
     df: DataFrame,
     by: str = "source",

@@ -1,7 +1,9 @@
 """Operator registry: names → callables ``(spark, catalog, **params) ->
 DataFrame | None``. Replaces the reference's importlib class-path
 loading (runtime/loader.py:15-137) as the primary lookup; the dotted
-``class_path`` escape hatch is kept for user extensions."""
+``class_path`` escape hatch is kept for user extensions. Ops that only
+adapt a package function to the catalog are rows of :data:`BINDINGS`;
+the rest are hand-written below."""
 
 from __future__ import annotations
 
@@ -147,71 +149,89 @@ def op_write(spark: SparkSession, catalog: Catalog, *, input: str, **params) -> 
     return None
 
 
-# -- config-declarable LLM-data operators (SURVEY §2.8) ---------------------
+# -- config-declarable LLM-data and event operators (SURVEY §2.8) -----------
+
+_PKG = "pyspark_pipeline_framework_spark"
+
+#: Pure adapters: op name → (``"module:function"`` under the package,
+#: catalog-input parameter names). :func:`bind` turns each row into an
+#: operator; the target's own docstring and signature are the op's
+#: contract (``tools/gendocs.py`` renders them).
+BINDINGS: dict[str, tuple[str, tuple[str, ...]]] = {
+    "quality_filter": ("llm.text:quality_filter", ("input",)),
+    "language_id": ("llm.text:language_id", ("input",)),
+    "dedup_exact": ("llm.dedup:exact_text_dedup", ("input",)),
+    "dedup_minhash_pairs": ("llm.dedup:minhash_candidate_pairs", ("input",)),
+    "minhash_bands": ("llm.dedup:minhash_bands", ("input",)),
+    "dedup_incremental_pairs": (
+        "llm.dedup:incremental_candidate_pairs", ("new_bands", "corpus_bands"),
+    ),
+    "jaccard_verify": ("llm.dedup:jaccard_verify", ("input", "candidates")),
+    "dedup_clusters": ("llm.dedup:dedup_clusters", ("input", "pairs")),
+    "duplicated_spans": ("llm.dedup:duplicated_spans", ("input",)),
+    "cut_spans": ("llm.dedup:cut_spans", ("input", "spans")),
+    "decontaminate": ("llm.dedup:decontaminate", ("input", "eval_set")),
+    "bloom_decontaminate": ("llm.dedup:bloom_decontaminate", ("input", "eval_set")),
+    "global_shuffle": ("llm.packing:global_shuffle", ("input",)),
+    "token_budget_sample": ("llm.packing:sample_to_token_budget", ("input",)),
+    "sample_stratified": ("llm.packing:stratified_sample", ("input",)),
+    "sample_domain_mix": ("llm.packing:domain_mix_sample", ("input",)),
+    "sample_weighted": ("llm.packing:weighted_sample", ("input",)),
+    "split_by_hash": ("llm.packing:split_by_hash", ("input",)),
+    "pack_sequences": ("llm.packing:pack_sequences", ("input",)),
+    "chunk_documents": ("llm.packing:chunk_documents", ("input",)),
+    "media_probe": ("llm.multimodal:probe_media", ("input",)),
+    "quantize_embeddings": ("llm.similarity:quantize_embeddings", ("input",)),
+    "semantic_dedup_pairs": ("llm.similarity:semantic_dedup_pairs", ("input",)),
+    "ivf_add": ("llm.similarity:ivf_add", ("input", "centroids")),
+    "ivf_search": ("llm.similarity:ivf_search", ("assigned", "centroids", "queries")),
+    "pq_encode": ("llm.pq:pq_encode", ("input", "codebooks")),
+    "pq_search": ("llm.pq:pq_search_adc", ("codes", "codebooks", "queries")),
+    "ivfpq_add": ("llm.pq:ivfpq_add", ("input", "centroids", "codebooks")),
+    "ivfpq_search": (
+        "llm.pq:ivfpq_search", ("store", "centroids", "codebooks", "queries"),
+    ),
+    "robust_outliers": ("operators.events:robust_outliers", ("input",)),
+    "funnel": ("operators.events:funnel_counts", ("input",)),
+    "retention": ("operators.events:cohort_retention", ("input",)),
+    "range_frame": ("operators.windows:global_range_frame", ("input",)),
+}
 
 
-@default_registry.register("quality_filter")
-def op_quality_filter(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Length/symbol/uniqueness text-quality gate -- llm.text.quality_filter."""
-    from pyspark_pipeline_framework_spark.llm.text import quality_filter
-
-    return catalog.put(output, quality_filter(catalog.get(input), **params))
+def resolve(target: str) -> Callable[..., DataFrame]:
+    """``"llm.text:quality_filter"`` → the package function it names."""
+    module, _, name = target.partition(":")
+    return load_class_path(f"{_PKG}.{module}.{name}")
 
 
-@default_registry.register("dedup_exact")
-def op_dedup_exact(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Exact text dedup by sha256 content key -- llm.dedup.exact_text_dedup."""
-    from pyspark_pipeline_framework_spark.llm.dedup import exact_text_dedup
+def bind(name: str, target: str, inputs: tuple[str, ...]) -> Operator:
+    """One :data:`BINDINGS` row as an operator: each named input is
+    popped from the params, looked up in the catalog and passed
+    positionally; every other param is passed by keyword; the result is
+    stored under ``output``. The target is imported on first call, so
+    loading the registry imports no ``llm`` module (nor pandas/pyarrow).
+    ``output`` stays a declared parameter: the runner injects it only
+    into operators that declare it."""
 
-    return catalog.put(output, exact_text_dedup(catalog.get(input), **params))
+    def op(spark: SparkSession, catalog: Catalog, *, output: str, **params) -> DataFrame:
+        for n in inputs:
+            if n not in params:
+                raise TypeError(
+                    f"{op.__name__}() missing 1 required keyword-only argument: {n!r}"
+                )
+        frames = [catalog.get(params.pop(n)) for n in inputs]
+        return catalog.put(output, resolve(target)(*frames, **params))
 
-
-@default_registry.register("dedup_minhash_pairs")
-def op_dedup_minhash_pairs(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """MinHash-LSH near-dup candidate pairs -- llm.dedup.minhash_candidate_pairs."""
-    from pyspark_pipeline_framework_spark.llm.dedup import minhash_candidate_pairs
-
-    return catalog.put(output, minhash_candidate_pairs(catalog.get(input), **params))
-
-
-@default_registry.register("minhash_bands")
-def op_minhash_bands(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """The persistable LSH band store — pair with ``op: write``
-    (bucketed by band_hash) to keep it between incremental runs."""
-    from pyspark_pipeline_framework_spark.llm.dedup import minhash_bands
-
-    return catalog.put(output, minhash_bands(catalog.get(input), **params))
+    op.__name__ = op.__qualname__ = f"op_{name}"
+    op.target, op.inputs = target, inputs  # type: ignore[attr-defined]
+    return op
 
 
-@default_registry.register("dedup_incremental_pairs")
-def op_dedup_incremental_pairs(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    new_bands: str,
-    corpus_bands: str,
-    **params,
-) -> DataFrame:
-    """Incremental MinHash-LSH: new-batch bands (``minhash_bands``
-    output) vs the persisted corpus band store — candidate pairs that
-    touch the new batch, never corpus×corpus."""
-    from pyspark_pipeline_framework_spark.llm.dedup import incremental_candidate_pairs
+for _name, (_target, _inputs) in BINDINGS.items():
+    default_registry.register(_name, bind(_name, _target, _inputs))
 
-    return catalog.put(
-        output,
-        incremental_candidate_pairs(
-            catalog.get(new_bands), catalog.get(corpus_bands), **params
-        ),
-    )
+
+# -- hand-written operators: contracts beyond a pure adapter -----------------
 
 
 @default_registry.register("dedup_ngram_pairs")
@@ -246,72 +266,6 @@ def op_dedup_ngram_pairs(
             "small corpora or pre-filtered candidates"
         )
     return catalog.put(output, ngram_jaccard_pairs(catalog.get(input), **params))
-
-
-@default_registry.register("jaccard_verify")
-def op_jaccard_verify(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    candidates: str,
-    **params,
-) -> DataFrame:
-    """The scale composition's verify stage: exact Jaccard over the
-    candidate pairs from ``dedup_minhash_pairs`` /
-    ``dedup_incremental_pairs``."""
-    from pyspark_pipeline_framework_spark.llm.dedup import jaccard_verify
-
-    return catalog.put(
-        output,
-        jaccard_verify(catalog.get(input), catalog.get(candidates), **params),
-    )
-
-
-@default_registry.register("dedup_clusters")
-def op_dedup_clusters(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    pairs: str,
-    **params,
-) -> DataFrame:
-    """Near-dup canonicalization: connected components over the pair
-    edge list, keep the smallest id per cluster."""
-    from pyspark_pipeline_framework_spark.llm.dedup import dedup_clusters
-
-    return catalog.put(
-        output, dedup_clusters(catalog.get(input), catalog.get(pairs), **params)
-    )
-
-
-@default_registry.register("duplicated_spans")
-def op_duplicated_spans(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params,
-) -> DataFrame:
-    """Exact-substring span dedup (maximal token spans whose every
-    min_tokens-gram occurs >= 2x corpus-wide) --
-    llm.dedup.duplicated_spans; cut the spans, keep the remainder."""
-    from pyspark_pipeline_framework_spark.llm.dedup import duplicated_spans
-
-    return catalog.put(output, duplicated_spans(catalog.get(input), **params))
-
-
-@default_registry.register("cut_spans")
-def op_cut_spans(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str,
-    spans: str, **params,
-) -> DataFrame:
-    """Apply a duplicated-span table: drop covered tokens, rebuild
-    clean_text from the unique remainder -- llm.dedup.cut_spans."""
-    from pyspark_pipeline_framework_spark.llm.dedup import cut_spans
-
-    return catalog.put(
-        output, cut_spans(catalog.get(input), catalog.get(spans), **params)
-    )
 
 
 @default_registry.register("substring_grams")
@@ -371,68 +325,6 @@ def op_dedup_incremental_spans(
     return catalog.put(output, upd)
 
 
-@default_registry.register("decontaminate")
-def op_decontaminate(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    eval_set: str,
-    **params,
-) -> DataFrame:
-    """Drop training docs sharing shingles with a (broadcast) eval set."""
-    from pyspark_pipeline_framework_spark.llm.dedup import decontaminate
-
-    return catalog.put(
-        output, decontaminate(catalog.get(input), catalog.get(eval_set), **params)
-    )
-
-
-@default_registry.register("global_shuffle")
-def op_global_shuffle(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Deterministic global shuffle into (shard, pos) training order --
-    llm.packing.global_shuffle."""
-    from pyspark_pipeline_framework_spark.llm.packing import global_shuffle
-
-    return catalog.put(output, global_shuffle(catalog.get(input), **params))
-
-
-@default_registry.register("token_budget_sample")
-def op_token_budget_sample(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str,
-    budget_tokens: int, **params,
-) -> DataFrame:
-    """Deterministic ~N-token subsample (per-shard prefix sums) --
-    llm.packing.sample_to_token_budget."""
-    from pyspark_pipeline_framework_spark.llm.packing import sample_to_token_budget
-
-    return catalog.put(
-        output, sample_to_token_budget(catalog.get(input), budget_tokens, **params)
-    )
-
-
-@default_registry.register("bloom_decontaminate")
-def op_bloom_decontaminate(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    eval_set: str,
-    **params,
-) -> DataFrame:
-    """Bounded-memory bloom-filter decontamination --
-    llm.dedup.bloom_decontaminate (one-sided: no false negatives)."""
-    from pyspark_pipeline_framework_spark.llm.dedup import bloom_decontaminate
-
-    return catalog.put(
-        output, bloom_decontaminate(catalog.get(input), catalog.get(eval_set), **params)
-    )
-
-
 @default_registry.register("ivf_train")
 def op_ivf_train(
     spark: SparkSession, catalog: Catalog, *, output: str, input: str, dim: int, **params
@@ -453,53 +345,6 @@ def op_ivf_train(
     return catalog.put(output, centroids_to_df(spark, trainer(corpus, dim, **params)))
 
 
-@default_registry.register("ivf_add")
-def op_ivf_add(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    centroids: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """Map-only assignment of an embedding batch under the frozen
-    quantizer — append the result to the assigned store."""
-    from pyspark_pipeline_framework_spark.llm.similarity import ivf_add
-
-    return catalog.put(
-        output, ivf_add(catalog.get(input), catalog.get(centroids), dim, **params)
-    )
-
-
-@default_registry.register("ivf_search")
-def op_ivf_search(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    assigned: str,
-    centroids: str,
-    queries: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """Top-k cosine search over the assigned IVF store."""
-    from pyspark_pipeline_framework_spark.llm.similarity import ivf_search
-
-    return catalog.put(
-        output,
-        ivf_search(
-            catalog.get(assigned),
-            catalog.get(centroids),
-            catalog.get(queries),
-            dim,
-            **params,
-        ),
-    )
-
-
 @default_registry.register("pq_train")
 def op_pq_train(
     spark: SparkSession, catalog: Catalog, *, output: str, input: str, dim: int, **params
@@ -518,196 +363,6 @@ def op_pq_train(
     return catalog.put(
         output, codebooks_to_df(spark, pq_train_codebooks_exact(corpus, dim, **params))
     )
-
-
-@default_registry.register("pq_encode")
-def op_pq_encode(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    codebooks: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """Map-only PQ encoding of an embedding batch under frozen
-    codebooks -- append the (id, codes) result to the code store."""
-    from pyspark_pipeline_framework_spark.llm.pq import pq_encode
-
-    return catalog.put(
-        output, pq_encode(catalog.get(input), catalog.get(codebooks), dim, **params)
-    )
-
-
-@default_registry.register("pq_search")
-def op_pq_search(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    codes: str,
-    codebooks: str,
-    queries: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """ADC top-k over a PQ code store (broadcast distance tables,
-    one wide aggregate) -- llm.pq.pq_search_adc."""
-    from pyspark_pipeline_framework_spark.llm.pq import pq_search_adc
-
-    return catalog.put(
-        output,
-        pq_search_adc(
-            catalog.get(codes),
-            catalog.get(codebooks),
-            catalog.get(queries),
-            dim,
-            **params,
-        ),
-    )
-
-
-@default_registry.register("ivfpq_add")
-def op_ivfpq_add(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    input: str,
-    centroids: str,
-    codebooks: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """One map-only pass assigning + PQ-encoding an embedding batch
-    under a frozen quantizer pair (train via op: ivf_train mode=exact
-    + op: pq_train) -- append the (id, cell, codes) rows to the IVFPQ
-    store; no raw vector is stored."""
-    from pyspark_pipeline_framework_spark.llm.pq import ivfpq_add
-
-    return catalog.put(
-        output,
-        ivfpq_add(
-            catalog.get(input), catalog.get(centroids), catalog.get(codebooks),
-            dim, **params,
-        ),
-    )
-
-
-@default_registry.register("ivfpq_search")
-def op_ivfpq_search(
-    spark: SparkSession,
-    catalog: Catalog,
-    *,
-    output: str,
-    store: str,
-    centroids: str,
-    codebooks: str,
-    queries: str,
-    dim: int,
-    **params,
-) -> DataFrame:
-    """Cell-pruned ADC top-k over an IVFPQ store --
-    llm.pq.ivfpq_search."""
-    from pyspark_pipeline_framework_spark.llm.pq import ivfpq_search
-
-    return catalog.put(
-        output,
-        ivfpq_search(
-            catalog.get(store),
-            catalog.get(centroids),
-            catalog.get(codebooks),
-            catalog.get(queries),
-            dim,
-            **params,
-        ),
-    )
-
-
-@default_registry.register("sample_stratified")
-def op_sample_stratified(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Deterministic md5-keyed sampling (keep iff hash(id) < rate) --
-    llm.packing.stratified_sample."""
-    from pyspark_pipeline_framework_spark.llm.packing import stratified_sample
-
-    return catalog.put(output, stratified_sample(catalog.get(input), **params))
-
-
-@default_registry.register("sample_domain_mix")
-def op_sample_domain_mix(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Temperature-reweighted per-domain sampling (p_d proportional to
-    n_d^alpha) -- llm.packing.domain_mix_sample."""
-    from pyspark_pipeline_framework_spark.llm.packing import domain_mix_sample
-
-    return catalog.put(output, domain_mix_sample(catalog.get(input), **params))
-
-
-@default_registry.register("sample_weighted")
-def op_sample_weighted(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Per-row importance sampling (keep probability proportional to a
-    weight column, expected fraction pinned) --
-    llm.packing.weighted_sample."""
-    from pyspark_pipeline_framework_spark.llm.packing import weighted_sample
-
-    return catalog.put(output, weighted_sample(catalog.get(input), **params))
-
-
-@default_registry.register("language_id")
-def op_language_id(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """N-gram-marker language identification -- llm.text.language_id."""
-    from pyspark_pipeline_framework_spark.llm.text import language_id
-
-    return catalog.put(output, language_id(catalog.get(input), **params))
-
-
-@default_registry.register("split_by_hash")
-def op_split_by_hash(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Deterministic train/valid/test split -- llm.packing.split_by_hash."""
-    from pyspark_pipeline_framework_spark.llm.packing import split_by_hash
-
-    return catalog.put(output, split_by_hash(catalog.get(input), **params))
-
-
-@default_registry.register("pack_sequences")
-def op_pack_sequences(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Greedy sequence packing into token budgets -- llm.packing.pack_sequences."""
-    from pyspark_pipeline_framework_spark.llm.packing import pack_sequences
-
-    return catalog.put(output, pack_sequences(catalog.get(input), **params))
-
-
-@default_registry.register("chunk_documents")
-def op_chunk_documents(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Overlapping token-window chunking -- llm.packing.chunk_documents."""
-    from pyspark_pipeline_framework_spark.llm.packing import chunk_documents
-
-    return catalog.put(output, chunk_documents(catalog.get(input), **params))
-
-
-@default_registry.register("media_probe")
-def op_media_probe(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Magic-byte media probing over a binary `payload` column
-    (format + dimensions/duration) — see llm/multimodal.py."""
-    from pyspark_pipeline_framework_spark.llm.multimodal import probe_media
-
-    return catalog.put(output, probe_media(catalog.get(input), **params))
 
 
 @default_registry.register("compact_store")
@@ -735,27 +390,6 @@ def op_compact_store(
         params["remove_ids"] = catalog.get(remove_ids_input)
     df = compact_batch_store(spark, store, out, **params)
     return catalog.put(output, df) if output else None
-
-
-@default_registry.register("quantize_embeddings")
-def op_quantize_embeddings(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Symmetric int8 embedding quantization -- llm.similarity.quantize_embeddings."""
-    from pyspark_pipeline_framework_spark.llm.similarity import quantize_embeddings
-
-    return catalog.put(output, quantize_embeddings(catalog.get(input), **params))
-
-
-@default_registry.register("semantic_dedup_pairs")
-def op_semantic_dedup_pairs(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, dim: int, **params
-) -> DataFrame:
-    """SemDeDup-style within-cluster cosine pairs --
-    llm.similarity.semantic_dedup_pairs (feed into dedup_clusters)."""
-    from pyspark_pipeline_framework_spark.llm.similarity import semantic_dedup_pairs
-
-    return catalog.put(output, semantic_dedup_pairs(catalog.get(input), dim, **params))
 
 
 @default_registry.register("bm25_topk")
@@ -788,48 +422,6 @@ def op_tfidf_terms(
 
     params.setdefault("idf_mode", "ln")
     return catalog.put(output, tfidf_topk_terms(catalog.get(input), **params))
-
-
-@default_registry.register("robust_outliers")
-def op_robust_outliers(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Median/MAD robust outlier screen (|x - med| > k*MAD, discrete
-    quantiles) -- operators.events.robust_outliers."""
-    from pyspark_pipeline_framework_spark.operators.events import robust_outliers
-
-    return catalog.put(output, robust_outliers(catalog.get(input), **params))
-
-
-@default_registry.register("funnel")
-def op_funnel(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Ordered event-funnel step counts -- operators.events.funnel_counts."""
-    from pyspark_pipeline_framework_spark.operators.events import funnel_counts
-
-    return catalog.put(output, funnel_counts(catalog.get(input), **params))
-
-
-@default_registry.register("retention")
-def op_retention(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Cohort retention matrix -- operators.events.cohort_retention."""
-    from pyspark_pipeline_framework_spark.operators.events import cohort_retention
-
-    return catalog.put(output, cohort_retention(catalog.get(input), **params))
-
-
-@default_registry.register("range_frame")
-def op_range_frame(
-    spark: SparkSession, catalog: Catalog, *, output: str, input: str, **params
-) -> DataFrame:
-    """Scale-safe global value-range window frame --
-    operators.windows.global_range_frame (no single-partition sort)."""
-    from pyspark_pipeline_framework_spark.operators.windows import global_range_frame
-
-    return catalog.put(output, global_range_frame(catalog.get(input), **params))
 
 
 @default_registry.register("stream")

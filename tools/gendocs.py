@@ -11,7 +11,8 @@ Introspects the live package (never a hand-maintained list):
   driver and ``tools/selfcheck.py`` re-run every round.
 
 Usage: python tools/gendocs.py   (rewrites docs/API.md in place;
-CI-checkable by diffing the output against the committed file).
+``tests/test_registry_bindings.py`` fails when the committed file
+differs from :func:`render`).
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+API_MD = os.path.join(REPO, "docs", "API.md")
 
 #: library modules documented function-by-function
 LIB_MODULES = [
@@ -65,6 +67,23 @@ def _sig(fn) -> str:
         return "(...)"
 
 
+def _op_doc(fn) -> tuple[object, str]:
+    """(the function that documents op ``fn``, its params signature). A
+    binding-table op is documented by its target: its catalog inputs,
+    then the target's parameters after the positional frames."""
+    target = getattr(fn, "target", None)
+    if target is None:
+        return fn, _sig(fn)
+    from pyspark_pipeline_framework_spark.plans.registry import resolve
+
+    wrapped = resolve(target)
+    kw = inspect.Parameter.KEYWORD_ONLY
+    rest = list(inspect.signature(wrapped).parameters.values())[len(fn.inputs):]
+    params = [inspect.Parameter(n, kw, annotation="str") for n in fn.inputs]
+    params += [p.replace(kind=kw) for p in rest]
+    return wrapped, str(inspect.Signature(params))
+
+
 def _suite_xref() -> dict[str, list[str]]:
     """function name -> sorted suite case names whose source calls it."""
     from pyspark_pipeline_framework_spark.suite import all_cases
@@ -92,7 +111,8 @@ def _suite_xref() -> dict[str, list[str]]:
     return xref
 
 
-def main() -> int:
+def render() -> str:
+    """The full text of docs/API.md for the package as it is now."""
     from pyspark_pipeline_framework_spark.plans.registry import default_registry
 
     from pyspark_pipeline_framework_spark import __version__
@@ -118,13 +138,13 @@ def main() -> int:
         "",
     ]
     for name in default_registry.names():
-        fn = default_registry.get(name)
+        fn, params = _op_doc(default_registry.get(name))
         out += [
             f"### `op: {name}`",
             "",
             f"- **source**: `{_rel(fn)}`",
             f"- **contract**: {_first_sentence(inspect.getdoc(fn))}",
-            f"- **params**: `{_sig(fn)}`",
+            f"- **params**: `{params}`",
             "",
         ]
     for modname in LIB_MODULES:
@@ -162,12 +182,13 @@ def main() -> int:
         "`tests/` rather than SQL oracles.",
         "",
     ]
-    path = os.path.join(REPO, "docs", "API.md")
-    with open(path, "w") as f:
-        f.write("\n".join(out))
-    n_ops = len(default_registry.names())
-    n_fns = sum(1 for line in out if line.startswith("### `") and "op: " not in line)
-    print(f"wrote {path}: {n_ops} registry ops, {n_fns} library functions")
+    return "\n".join(out)
+
+
+def main() -> int:
+    with open(API_MD, "w") as f:
+        f.write(render())
+    print(f"wrote {API_MD}")
     return 0
 
 
